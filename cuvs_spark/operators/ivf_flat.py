@@ -13,14 +13,20 @@ Spark design (SURVEY.md §2.5): the index IS a partitioning.
   ``n_lists`` centroids; the assignment table ``(id, list_id, vec)`` is
   the inverted file. Persisted ``partitionBy(list_id)`` so searches
   prune at the *file listing* level.
-* **search** — coarse stage: queries × broadcast centroids → top
-  ``n_probes`` lists per query (tiny). Fine stage: the probe set is
-  broadcast against the assignment table, so only rows whose
-  ``list_id`` is probed are scanned — Spark's dynamic partition
-  pruning / broadcast-hash-join does exactly what the reference's
-  ``select_clusters`` + per-list scan does, and the dataset side never
-  shuffles. At 1000 executors the scan reads
-  ``n_probes / n_lists`` of the data — same asymptotic win as the GPU.
+* **search** — one skeleton for every IVF family (IVF-Flat/PQ/SQ/BQ,
+  RaBitQ, ScaNN), the reference's ``select_clusters`` + per-list scan.
+  :func:`probe_lists` is the coarse stage: a map-only fold of each query
+  against the literal centroids keeps its ``n_probes`` nearest lists.
+  :func:`fine_topk` is the fine stage: each probed list meets exactly
+  the queries probing it (cogroup, or broadcast probing queries when
+  the lists dwarf the batch), a per-family scorer turns the list into a
+  score tile, a local top-k cuts it, and ``knn_merge_parts`` merges.
+  Only the scorer differs between families. The oracle-exact
+  ``method="expr"`` paths broadcast the probe set into the lists table
+  instead and score with JVM expressions; either way only probed lists
+  are scanned and the dataset side never shuffles for the join. At
+  1000 executors the scan reads ``n_probes / n_lists`` of the data —
+  same asymptotic win as the GPU.
 * **extend** — append + assign to nearest existing center
   (``ivf_flat.pyx:467``): a union plus one broadcast join.
 """
@@ -117,49 +123,25 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
                     prefilter: Column | None = None) -> DataFrame:
     """Partition-pruned ANN search → ``(qid, nid, distance, rank)``.
 
-    ``method="expr"`` scores the probed rows with the JVM distance
-    expression (oracle-exact). ``method="blas"`` runs the fine stage as
-    a *cogroup* on list_id — each list's vectors meet exactly the
-    queries probing it in one Arrow batch, scored by a NumPy GEMM tile
-    and reduced to a local top-k before the merge. At the 200k-row
-    probe this is ~10× faster per scanned pair; it is the 100 TB fine
-    stage (``ivfflat_interleaved_scan`` analog). ``method="broadcast"``
-    goes further when the inverted file dwarfs the query batch: probing
-    queries are broadcast and each lists partition scores in place —
-    the dataset never shuffles (2.6× the cogroup at the 200k probe)."""
+    :func:`probe_lists` picks each query's lists; the fine stage scores
+    the probed rows. ``method="expr"`` scores them with the JVM distance
+    expression (oracle-exact). ``method="blas"`` and
+    ``method="broadcast"`` run :func:`fine_topk` with a NumPy GEMM tile
+    per list — the cogroup path, or the collect-and-broadcast path that
+    never shuffles the inverted file (2.6× the cogroup at the 200k
+    probe, when the inverted file dwarfs the query batch)."""
     metric = metric or index.metric
-    spark = queries.sparkSession
     # bitset-filter analog (filters.pyx works across index types): a
     # boolean Column over the inverted file (id / list_id / vec),
     # applied BEFORE any distance math, shared by all three methods —
     # Catalyst pushes id-predicates into the (partition-pruned) scan
     lists = index.lists if prefilter is None else index.lists.filter(prefilter)
-    from cuvs_spark.plans.layout import spread_narrow
-    # r14: the coarse literal fold is per-QUERY heavy compute — spread a
-    # narrow query batch over the cores (no-op when already split)
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
-    # coarse: top-n_probes lists per query (always by the *coarse* metric
-    # of the quantizer — sqeuclidean — matching ivf_flat_search.cuh).
-    # r14: map-only literal slice of the best-first sorted centroid fold
-    # — same rows and tie order as the old broadcast-join + window
-    # (array_sort on (d, l) structs == ORDER BY _cd, list_id), with the
-    # BroadcastNestedLoopJoin, Sort and window Exchange all gone.
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    # r15: the query vector rides along through the probe explode (the
-    # probe set is a pure function of q, so re-joining q on qid only
-    # re-attached a column this projection already holds) — the
-    # probes ⋈ q join and its exchange/broadcast disappear from every
-    # fine stage; rows and values are identical by construction.
-    probes = (q.select(
-        "qid", "_qv",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").alias("list_id"), "_qv"))
-    if method == "blas":
-        return _fine_blas(lists, q, probes, k, metric)
-    if method == "broadcast":
-        return _fine_broadcast(lists, q, probes, k, metric)
+    probes = probe_lists(index.centroids, _query_frame(queries, qid_col,
+                                                       qvec_col), n_probes)
+    if method in ("blas", "broadcast"):
+        return fine_topk(lists, probes.select("list_id", "qid", "_qv"),
+                         _flat_scorer(metric), k, is_min_close(metric),
+                         broadcast=method == "broadcast")
     # fine: broadcast the (qid, list_id, qv) probe set against the
     # inverted file — only probed lists are scanned, dataset side never
     # shuffles.
@@ -171,105 +153,137 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
                     select_min=is_min_close(metric), tie_cols=["nid"])
 
 
-def _fine_blas(lists: DataFrame, q: DataFrame, probes: DataFrame,
-               k: int, metric: str, *, dedupe: bool = False) -> DataFrame:
-    """Cogrouped fine stage: per list_id, (list vectors) × (probing
-    queries) → GEMM tile → local top-k; global knn_merge_parts.
-    ``lists`` is any ``(list_id, id, vec)`` relation; ``dedupe=True``
-    collapses a vector probed through several lists (ScaNN's spilled
-    assignment) to its single exact distance before the merge."""
+# ---------------------------------------------------------------------------
+# The IVF search skeleton shared by IVF-Flat/PQ/SQ/BQ, RaBitQ and ScaNN
+# ---------------------------------------------------------------------------
+
+def _query_frame(queries: DataFrame, qid_col: str,
+                 qvec_col: str) -> DataFrame:
+    """``(qid long, _qv)`` spread over the cores: the coarse literal
+    fold is per-query heavy compute, so a narrow query batch is
+    repartitioned (no-op when already split)."""
+    from cuvs_spark.plans.layout import spread_narrow
+    return spread_narrow(
+        queries.select(F.col(qid_col).cast("long").alias("qid"),
+                       F.col(qvec_col).alias("_qv")), "qid")
+
+
+def probe_lists(centroids: np.ndarray, q: DataFrame,
+                n_probes: int) -> DataFrame:
+    """Coarse stage (``select_clusters``): each query's ``n_probes``
+    nearest lists under the quantizer's sqeuclidean geometry →
+    ``(qid, list_id int, _cent, _qv, *other q columns)``.
+
+    A map-only literal slice of the best-first sorted centroid fold —
+    ties break to the lowest list id, as the oracle's ``ORDER BY d, l``.
+    The probed center (``_cent``) and the query vector ride along, so no
+    fine stage joins the centroids or the queries back; consumers that
+    do not read a column prune it at no cost."""
+    cs = coarse_sorted_sql("_qv", centroids)
+    return (q.select(
+        "*", F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
+        .select("qid", F.col("_s.l").alias("list_id"),
+                F.col("_s.cv").alias("_cent"),
+                *[c for c in q.columns if c != "qid"]))
+
+
+def _keyed_like(probes: DataFrame, table: DataFrame) -> DataFrame:
+    """Cast the probes' ``list_id`` to the type of the probed table's
+    (``long`` for rabitq/scann and expr-built IVF-PQ, ``int`` for the
+    rest). A cogroup needs it: an ``int`` and a ``long`` key hash to
+    different partitions, so mismatched sides lose lists. A no-op cast
+    is optimized away."""
+    return probes.withColumn(
+        "list_id", F.col("list_id").cast(table.schema["list_id"].dataType))
+
+
+def _matrix(col) -> np.ndarray:
+    """An Arrow array column as a float64 matrix."""
+    return np.vstack(col.to_numpy()).astype(np.float64)
+
+
+def _flat_scorer(metric: str):
+    from cuvs_spark.operators.brute_force import _pairwise_np
+
+    def score(list_id, rows, qs):
+        return _pairwise_np(_matrix(qs["_qv"]), _matrix(rows["vec"]), metric)
+    return score
+
+
+def _local_topk(qids, ids, D: np.ndarray, k: int, minimize: bool):
+    """The per-list local top-k: the best ``min(k, m)`` columns of each
+    row of the ``(p, m)`` score tile (unordered) as ``(qid, nid,
+    distance)`` rows."""
+    import pandas as pd
+    kk = min(k, D.shape[1])
+    part = np.argpartition(D if minimize else -D, kk - 1, axis=1)[:, :kk]
+    return pd.DataFrame({
+        "qid": np.repeat(np.asarray(qids, np.int64), kk),
+        "nid": np.take_along_axis(np.broadcast_to(
+            np.asarray(ids, np.int64), D.shape), part, axis=1).ravel(),
+        "distance": np.take_along_axis(D, part, axis=1).ravel()})
+
+
+def fine_topk(lists: DataFrame, probing_q: DataFrame, score, k: int,
+              minimize: bool, *, broadcast: bool = False,
+              dedupe: bool = False) -> DataFrame:
+    """The IVF fine stage (``ivfflat_interleaved_scan`` analog) →
+    ``(qid, nid, distance, rank)``.
+
+    ``lists`` is the probed table (``list_id``, ``id`` and the family's
+    payload columns); ``probing_q`` holds ``list_id``, ``qid`` and the
+    query-side columns the scorer reads. ``score(list_id, rows_pdf,
+    q_pdf)`` returns the ``(len(q_pdf), len(rows_pdf))`` score tile of
+    one list — the only per-family part. Each list keeps a local top-k
+    and ``knn_merge_parts`` merges them.
+
+    By default each list cogroups with exactly the queries probing it.
+    ``broadcast=True`` collects the probing query sets per list
+    (small-side-by-contract, like the brute-force query matrix) and
+    broadcasts them, so every ``lists`` partition scores its own lists
+    in place and the table never shuffles — only the ``n_parts × q × k``
+    merge does. ``dedupe=True`` collapses a row probed through several
+    lists (ScaNN's spilled assignment) to its single distance."""
     import pandas as pd
 
-    from cuvs_spark.operators.brute_force import _pairwise_np
     from cuvs_spark.operators.select_k import knn_merge_parts
 
-    minimize = is_min_close(metric)
-    # r15: probes that already carry the query vector skip the join-back
-    probing_q = (probes.select("list_id", "qid", "_qv")
-                 if "_qv" in probes.columns
-                 else probes.join(q, "qid").select("list_id", "qid", "_qv"))
+    schema = "qid long, nid long, distance double"
+    if broadcast:
+        qcols = [c for c in probing_q.columns if c != "list_id"]
+        by_list = {int(r["list_id"]): pd.DataFrame(r["qs"], columns=qcols)
+                   for r in probing_q.groupBy("list_id")
+                   .agg(F.collect_list(F.struct(*qcols)).alias("qs"))
+                   .collect()}
+        bc = lists.sparkSession.sparkContext.broadcast(by_list)
 
-    def score(key, rows: pd.DataFrame, queries_pdf: pd.DataFrame):
-        if rows.empty or queries_pdf.empty:
-            return pd.DataFrame(columns=["qid", "nid", "distance"])
-        import numpy as np
-        X = np.vstack(rows["vec"].to_numpy()).astype(np.float64)
-        ids = rows["id"].to_numpy().astype(np.int64)
-        Q = np.vstack(queries_pdf["_qv"].to_numpy()).astype(np.float64)
-        qids = queries_pdf["qid"].to_numpy().astype(np.int64)
-        D = _pairwise_np(Q, X, metric)
-        kk = min(k, D.shape[1])
-        part = (np.argpartition(D if minimize else -D, kk - 1, axis=1)
-                [:, :kk])
-        return pd.DataFrame({
-            "qid": np.repeat(qids, kk),
-            "nid": np.take_along_axis(
-                np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-            "distance": np.take_along_axis(D, part, axis=1).ravel()})
+        def score_parts(batches):
+            for pdf in batches:
+                outs = [_local_topk(qs["qid"], rows["id"],
+                                    score(int(lid), rows, qs), k, minimize)
+                        for lid, rows in pdf.groupby("list_id")
+                        if (qs := bc.value.get(int(lid))) is not None]
+                if outs:
+                    yield pd.concat(outs)
 
-    local = (lists.groupBy("list_id")
-             .cogroup(probing_q.groupBy("list_id"))
-             .applyInPandas(score, schema="qid long, nid long, distance double"))
+        local = (lists.select("list_id",
+                              *[c for c in lists.columns if c != "list_id"])
+                 .mapInPandas(score_parts, schema))
+    else:
+        scorer = score   # the cogroup UDF below is named ``score`` in plans
+
+        def score(key, rows, qs):
+            if rows.empty or qs.empty:
+                return pd.DataFrame(columns=["qid", "nid", "distance"])
+            return _local_topk(qs["qid"], rows["id"],
+                               scorer(int(key[0]), rows, qs), k, minimize)
+
+        local = (lists.groupBy("list_id")
+                 .cogroup(_keyed_like(probing_q, lists).groupBy("list_id"))
+                 .applyInPandas(score, schema=schema))
     if dedupe:
         local = (local.groupBy("qid", "nid")
                  .agg(F.min("distance").alias("distance")))
-    return knn_merge_parts(local, k, select_min=minimize)
-
-
-def _fine_broadcast(lists: DataFrame, q: DataFrame, probes: DataFrame,
-                    k: int, metric: str) -> DataFrame:
-    """Broadcast-queries fine stage: the inverted file NEVER shuffles.
-    The probing (qid, vector) sets are grouped per list, collected
-    (small-side-by-contract, like the brute-force query matrix) and
-    broadcast; each *lists partition* GEMM-scores its own lists in
-    place and emits a local top-k — the only exchange is the
-    ``n_parts × q × k`` merge. Prefer over the cogroup when the
-    inverted file dwarfs the query batch."""
-    import pandas as pd
-
-    from cuvs_spark.operators.brute_force import _pairwise_np
-    from cuvs_spark.operators.select_k import knn_merge_parts
-
-    minimize = is_min_close(metric)
-    spark = q.sparkSession
-    qp = (probes if "_qv" in probes.columns
-          else probes.join(q, "qid"))
-    qp_rows = (qp.groupBy("list_id")
-               .agg(F.collect_list(F.struct("qid", "_qv")).alias("qs"))
-               .collect())
-    by_list = {}
-    for r in qp_rows:
-        import numpy as np
-        qids = np.array([x["qid"] for x in r["qs"]], dtype=np.int64)
-        Q = np.array([x["_qv"] for x in r["qs"]], dtype=np.float64)
-        by_list[int(r["list_id"])] = (qids, Q)
-    bc = spark.sparkContext.broadcast(by_list)
-
-    def score_parts(batches):
-        import numpy as np
-        for pdf in batches:
-            outs = []
-            for lid, rows in pdf.groupby("list_id"):
-                hit = bc.value.get(int(lid))
-                if hit is None:
-                    continue
-                qids, Q = hit
-                X = np.vstack(rows["vec"].to_numpy()).astype(np.float64)
-                ids = rows["id"].to_numpy().astype(np.int64)
-                D = _pairwise_np(Q, X, metric)
-                kk = min(k, D.shape[1])
-                part = (np.argpartition(D if minimize else -D, kk - 1,
-                                        axis=1)[:, :kk])
-                outs.append(pd.DataFrame({
-                    "qid": np.repeat(qids, kk),
-                    "nid": np.take_along_axis(
-                        np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                    "distance": np.take_along_axis(D, part, axis=1).ravel()}))
-            if outs:
-                yield pd.concat(outs)
-
-    local = lists.select("list_id", "id", "vec").mapInPandas(
-        score_parts, "qid long, nid long, distance double")
     return knn_merge_parts(local, k, select_min=minimize)
 
 

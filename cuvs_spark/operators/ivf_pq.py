@@ -15,16 +15,21 @@ Spark design:
   or ``(id, list_id, rcodes array<int>)`` (SQ int8 residual codes),
   partitioned by list_id like IVF-Flat. 64-dim float32 rows become 8
   bytes (PQ) / 64 bytes (SQ).
-* **PQ search** — the reference's per-query LUT is a *join*: the LUT
+* **search** — the shared IVF skeleton (``operators/ivf_flat.py``):
+  ``probe_lists`` is the coarse stage and ``fine_topk`` the fine stage
+  of every ``blas``/``broadcast`` path; each family only supplies its
+  per-list scorer. PQ scores a list's code matrix by per-query LUT
+  gather (``_pq_scorer``, codebook densified once); SQ decodes
+  ``center + lo + (code+128)·step`` and scores it with the flat GEMM
+  tile (``_pairwise_np``); BQ (popcount) has only the expr path.
+* **expr search (oracle paths)** — the PQ LUT is a *join*: the LUT
   relation ``(qid, sub, code, subdist)`` (n_queries × pq_dim × 2^bits
   rows — tiny, broadcast) joins the exploded probed codes on
   (sub, code); summing subdists per (qid, id) IS the LUT lookup
   accumulation, with map-side combine. The per-(qid,id) partials are
   folded in subspace order (sorted-array fold) so results are
-  deterministic and oracle-exact.
-* **SQ search** — decode is a closed-form expression
-  (``center + lo + (code+128)·step``), distance runs on the decoded
-  array; everything stays in whole-stage codegen.
+  deterministic and oracle-exact. SQ decodes with a closed-form
+  expression and scores the decoded array inside whole-stage codegen.
 * **directional** (since r12): IVF-SQ takes any metric (decode is
   metric-agnostic); IVF-PQ covers the reference's full metric surface
   (sqeuclidean / euclidean / inner_product / cosine,
@@ -45,6 +50,8 @@ from pyspark.sql import functions as F
 
 from cuvs_spark.cluster.kmeans import assign, coarse_sorted_sql, kmeans_fit
 from cuvs_spark.functions.distance import distance_sql_spark
+from cuvs_spark.operators.ivf_flat import (_matrix, _query_frame, fine_topk,
+                                           probe_lists)
 from cuvs_spark.operators.select_k import select_k
 from cuvs_spark.preprocessing.pq import PQCodebook, _subvecs, pq_build
 
@@ -234,57 +241,39 @@ def _pq_enc_input(d: DataFrame, centroids: np.ndarray, encode: str,
     list center (then rotated when a build-time rotation exists)."""
     spark = d.sparkSession
     if method != "blas":
-        # r14: expr assignment as a map-only literal fold — label AND
-        # the list center come out of one projection (no assign
-        # aggregate, no join-back, no centroid join)
+        # expr assignment as a map-only literal fold — label AND the
+        # list center come out of one projection
         best = F.expr(f"element_at({coarse_sorted_sql('vec', centroids)}, 1)")
         d_lab = d.withColumn("_b", best).select(
             "id", F.col("_b.l").cast("long").alias("list_id"),
             F.col("_b.cv").alias("_cent"), "vec")
-        if encode == "residual":
-            enc_in = d_lab.select(
-                "id", "list_id",
-                F.expr(_res_expr("vec", "_cent")).alias("vec"))
-            if rotation is not None:
-                Rb = spark.sparkContext.broadcast(rotation)
-
-                def rot(batches):
-                    import pandas as pd
-                    for pdf in batches:
-                        if pdf.empty:
-                            continue
-                        X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-                        pdf["vec"] = list(X @ Rb.value.T)
-                        yield pdf
-
-                enc_in = enc_in.mapInPandas(
-                    rot, "id long, list_id long, vec array<double>")
-            return enc_in
-        return d_lab.select("id", "list_id", "vec")
-    lab = assign(d, centroids, metric="sqeuclidean", method="blas")
-    if encode == "residual":
+        if encode != "residual":
+            return d_lab.select("id", "list_id", "vec")
+        enc_in = d_lab.select(
+            "id", "list_id", F.expr(_res_expr("vec", "_cent")).alias("vec"))
+    else:
+        lab = assign(d, centroids, metric="sqeuclidean", method="blas")
+        if encode != "residual":
+            return d.join(lab.withColumnRenamed("label", "list_id"), "id") \
+                .select("id", "list_id", "vec")
         cent = _cent_df(spark, centroids)
         enc_in = (d.join(lab.withColumnRenamed("label", "list_id"), "id")
                   .join(F.broadcast(cent), "list_id")
                   .select("id", "list_id",
                           F.expr(_res_expr("vec", "centroid")).alias("vec")))
-        if rotation is not None:
-            Rb = spark.sparkContext.broadcast(rotation)
-
-            def rot(batches):
-                import pandas as pd
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-                    pdf["vec"] = list(X @ Rb.value.T)
-                    yield pdf
-
-            enc_in = enc_in.mapInPandas(
-                rot, "id long, list_id long, vec array<double>")
+    if rotation is None:
         return enc_in
-    return d.join(lab.withColumnRenamed("label", "list_id"), "id") \
-        .select("id", "list_id", "vec")
+    Rb = spark.sparkContext.broadcast(rotation)
+
+    def rot(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+            pdf["vec"] = list(X @ Rb.value.T)
+            yield pdf
+
+    return enc_in.mapInPandas(rot, "id long, list_id long, vec array<double>")
 
 
 def _pq_encode(enc_in: DataFrame, cb_df: DataFrame, pq_dim: int,
@@ -349,7 +338,7 @@ def ivf_pq_transform(index: IVFPQIndex, dataset: DataFrame, *,
 
 
 def _pq_lut_score(Q, C, CB, S, w, cent_vec, rot, metric):
-    """Per-list LUT scoring shared by the blas/broadcast paths →
+    """Per-list LUT scoring (the blas/broadcast IVF-PQ scorer) →
     the (p, m) score matrix for queries ``Q`` against the list's code
     matrix ``C``. L2 family: the reference LUT (shift the query by the
     list center for residual encoding, then per-subspace squared
@@ -384,219 +373,95 @@ def _pq_lut_score(Q, C, CB, S, w, cent_vec, rot, metric):
     return D
 
 
+def _pq_scorer(index: IVFPQIndex, metric: str):
+    """The IVF-PQ per-list scorer for :func:`fine_topk`: one LUT per
+    probing query, gathered over the list's code matrix. L2 residual
+    encoding shifts the query by the list center (then the build-time
+    rotation); IP residual adds the per-list ``q·c`` constant instead.
+    Floor-width slicing keeps parity with ``_subvecs`` when
+    ``dim % pq_dim != 0``."""
+    S, rot = index.pq_dim, index.rotation
+    # the codebook, densified once: (pq_dim, n_codes, width)
+    cb_rows = index.codebook_df.collect()
+    w = len(cb_rows[0]["centroid"])
+    CB = np.zeros((S, max(r["code"] for r in cb_rows) + 1, w))
+    for r in cb_rows:
+        CB[r["sub"], r["code"]] = r["centroid"]
+    cent = index.centroids if index.encode == "residual" else None
+
+    def score(list_id, rows, qs):
+        C = np.vstack(rows["codes"].to_numpy()).astype(np.int64)
+        return _pq_lut_score(_matrix(qs["_qv"]), C, CB, S, w,
+                             None if cent is None else cent[list_id],
+                             rot, metric)
+    return score
+
+
 def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
                   n_probes: int = 8, *, qid_col: str = "qid",
                   qvec_col: str = "vec", method: str = "expr",
                   prefilter=None) -> DataFrame:
     """LUT-join search → ``(qid, nid, distance, rank)``; distance is
-    the PQ-approximate sqeuclidean (sum of per-subspace code distances,
-    folded in subspace order → deterministic).
+    the PQ-approximate index-metric score (sum of per-subspace code
+    distances, folded in subspace order → deterministic).
 
-    ``method="blas"`` is the throughput path (the reference's
-    ``compute_similarity`` kernel shape): cogroup the codes table with
-    the probing queries per list, build each query's LUT once in NumPy,
-    score the whole list's code matrix by fancy-indexed LUT gather, and
-    keep a local top-k before the merge — no per-(row, subspace)
-    explosion, no LUT join relation.
-
-    ``method="broadcast"`` is the codes-dominant scale path: the
-    probing (qid, list, vector) set is broadcast (small-side-by-
-    contract, like the brute-force query matrix) and each codes
-    partition scores its own lists in place — the multi-TB codes table
-    never shuffles; only the ``n_parts × q × k`` local top-k merges.
-    Prefer it when codes ≫ queries; the cogroup wins when both sides
-    are small (its two shuffles are cheaper than the collect+broadcast
+    The coarse stage is :func:`probe_lists`. ``method="expr"`` (the
+    oracle path) joins the per-query LUT relation ``(qid, sub, code,
+    subdist)`` against the exploded probed codes. ``method="blas"`` and
+    ``method="broadcast"`` run :func:`fine_topk` with the LUT-gather
+    scorer (the reference's ``compute_similarity`` kernel shape): each
+    query's LUT is built once in NumPy and the whole list's code matrix
+    is scored by fancy-indexed gather — no per-(row, subspace)
+    explosion. ``"broadcast"`` is the codes-dominant scale path (the
+    codes table never shuffles); the cogroup wins when both sides are
+    small (its two shuffles are cheaper than the collect+broadcast
     round-trip)."""
     from cuvs_spark.functions.distance import is_min_close
     metric = _pq_metric(index.metric)
     minimize = is_min_close(metric)
     ip = _pq_lut_kind(metric) == "inner_product"
-    spark = queries.sparkSession
     # bitset-filter analog (filters.pyx applies to every index type):
     # boolean Column over the codes table, applied before scoring
     codes_t = (index.codes if prefilter is None
                else index.codes.filter(prefilter))
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
+    q = _query_frame(queries, qid_col, qvec_col)
     if metric == "cosine":
         from cuvs_spark.functions.vector import l2_normalize
         q = q.withColumn("_qv", l2_normalize("_qv"))
-    # r14: coarse probes as a map-only literal slice (guide §2.4) —
-    # same rows/ties as the old broadcast-join + window; the probed
-    # centroid vector rides along so the qc/qres stages below need no
-    # centroid join either. r15: the QUERY vector rides along too (the
-    # probe set is a pure function of q), so the qside/qres/qc stages
-    # need no probes ⋈ q join-back either — same rows, same values.
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    probes_cv = (q.select(
-        "qid", "_qv",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").alias("list_id"),
-                F.col("_s.cv").alias("_cent"), "_qv"))
-    probes = probes_cv.select("qid", "list_id")
+    probes_cv = probe_lists(index.centroids, q, n_probes)
+    if method in ("blas", "broadcast"):
+        return fine_topk(codes_t, probes_cv.select("list_id", "qid", "_qv"),
+                         _pq_scorer(index, metric), k, minimize,
+                         broadcast=method == "broadcast")
     residual = index.encode == "residual"
-    if method == "broadcast":
-        # The 100 TB shape: the codes table NEVER shuffles. Queries are
-        # small-side-by-contract (like the brute-force BLAS query
-        # matrix): probe assignment runs JVM-side, then the probing
-        # (qid, list_id, query-vector) set is collected + broadcast and
-        # each codes partition LUT-scores its own lists and emits a
-        # local top-k — the only exchange is the n_parts × q × k merge.
-        import pandas as pd
-
-        from cuvs_spark.operators.select_k import knn_merge_parts
-        cb_rows = index.codebook_df.collect()
-        S = index.pq_dim
-        n_codes = max(r["code"] for r in cb_rows) + 1
-        w = len(cb_rows[0]["centroid"])
-        CB = np.zeros((S, n_codes, w))
-        for r in cb_rows:
-            CB[r["sub"], r["code"]] = r["centroid"]
-        cent_np = index.centroids if residual else None
-        rot = index.rotation
-        qp_rows = (probes_cv
-                   .groupBy("list_id")
-                   .agg(F.collect_list(F.struct("qid", "_qv")).alias("qs"))
-                   .collect())
-        by_list = {}
-        for r in qp_rows:
-            qids = np.array([x["qid"] for x in r["qs"]], dtype=np.int64)
-            Q = np.array([x["_qv"] for x in r["qs"]], dtype=np.float64)
-            by_list[int(r["list_id"])] = (qids, Q)
-        bc = spark.sparkContext.broadcast(by_list)
-
-        def score_parts(batches):
-            for pdf in batches:
-                outs = []
-                for lid, rows in pdf.groupby("list_id"):
-                    hit = bc.value.get(int(lid))
-                    if hit is None:
-                        continue
-                    qids, Q = hit
-                    C = np.vstack(rows["codes"].to_numpy()).astype(np.int64)
-                    ids = rows["id"].to_numpy(np.int64)
-                    D = _pq_lut_score(
-                        Q, C, CB, S, w,
-                        cent_np[int(lid)] if cent_np is not None else None,
-                        rot, metric)
-                    kk = min(k, D.shape[1])
-                    part = np.argpartition(D if minimize else -D,
-                                           kk - 1, axis=1)[:, :kk]
-                    outs.append(pd.DataFrame({
-                        "qid": np.repeat(qids, kk),
-                        "nid": np.take_along_axis(
-                            np.broadcast_to(ids, D.shape), part,
-                            axis=1).ravel(),
-                        "distance": np.take_along_axis(D, part,
-                                                       axis=1).ravel()}))
-                if outs:
-                    yield pd.concat(outs)
-
-        local = codes_t.select("list_id", "id", "codes").mapInPandas(
-            score_parts, "qid long, nid long, distance double")
-        return knn_merge_parts(local, k, select_min=minimize)
-    if method == "blas":
-        import pandas as pd
-
-        from cuvs_spark.operators.select_k import knn_merge_parts
-        cb_rows = index.codebook_df.collect()
-        S = index.pq_dim
-        n_codes = max(r["code"] for r in cb_rows) + 1
-        w = len(cb_rows[0]["centroid"])
-        CB = np.zeros((S, n_codes, w))
-        for r in cb_rows:
-            CB[r["sub"], r["code"]] = r["centroid"]
-        cent_np = index.centroids if residual else None
-        rot = index.rotation
-        qside = probes_cv.select("list_id", "qid", "_qv")
-
-        def score(key, rows: pd.DataFrame, qp: pd.DataFrame):
-            if rows.empty or qp.empty:
-                return pd.DataFrame(columns=["qid", "nid", "distance"])
-            C = np.vstack(rows["codes"].to_numpy()).astype(np.int64)
-            ids = rows["id"].to_numpy(np.int64)
-            Q = np.vstack(qp["_qv"].to_numpy()).astype(np.float64)
-            qids = qp["qid"].to_numpy(np.int64)
-            # L2 residual: per probed list the query shifts by the list
-            # center (then the build-time rotation); IP residual: the
-            # per-list q·c constant instead. Floor-width slicing inside
-            # keeps parity with _subvecs when dim % S != 0.
-            D = _pq_lut_score(
-                Q, C, CB, S, w,
-                cent_np[int(key[0])] if cent_np is not None else None,
-                rot, metric)
-            kk = min(k, D.shape[1])
-            part = np.argpartition(D if minimize else -D,
-                                   kk - 1, axis=1)[:, :kk]
-            return pd.DataFrame({
-                "qid": np.repeat(qids, kk),
-                "nid": np.take_along_axis(
-                    np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-        local = (codes_t.groupBy("list_id")
-                 .cogroup(qside.groupBy("list_id"))
-                 .applyInPandas(score,
-                                "qid long, nid long, distance double"))
-        return knn_merge_parts(local, k, select_min=minimize)
-    pq_dim = index.pq_dim
+    if residual and index.rotation is not None:
+        raise ValueError("rotation requires method='blas'")
     # per-subspace LUT term of the DECOMPOSED kind (L2 squared
     # residuals for the euclidean family, subspace dots for the IP
     # family — _pq_metric guarantees one of them applies); the
     # euclidean sqrt / cosine 1−s transforms apply AFTER the fold
     sdist = F.expr(distance_sql_spark(_pq_lut_kind(metric),
                                       "qsub", "centroid"))
-    if residual and ip:
-        if index.rotation is not None:
-            raise ValueError("rotation requires method='blas'")
-        # IP residual: q·(c + r̂) = q·c + Σ_sub q_sub·r̂_sub — the LUT
-        # is per-QUERY only (subspace dots of the UNSHIFTED query, like
-        # the raw path) and the per-(query, probed list) constant q·c
-        # joins in after the fold. list_id is carried through the
-        # grouping (each row lives in exactly one list, so it's free).
-        qsub = _subvecs(q.withColumnRenamed("qid", "id"), pq_dim,
-                        id_col="id", vec_col="_qv") \
-            .withColumnRenamed("id", "qid") \
-            .withColumnRenamed("subvec", "qsub")
-        lut = (qsub.join(F.broadcast(index.codebook_df), "sub")
-               .select("qid", "sub", "code", sdist.alias("subdist")))
-        qc = probes_cv.select(
-            "qid", "list_id",
-            F.expr(distance_sql_spark("inner_product", "_qv",
-                                      "_cent")).alias("_qc"))
-        probed = (codes_t.join(F.broadcast(probes), "list_id")
-                  .select("qid", "list_id", "id",
-                          F.posexplode("codes").alias("sub", "code")))
-        folded = (probed.join(F.broadcast(lut), ["qid", "sub", "code"])
-                  .groupBy("qid", "list_id", F.col("id").alias("nid"))
-                  .agg(F.array_sort(
-                      F.collect_list(F.struct("sub", "subdist")))
-                      .alias("_sd"))
-                  .select("qid", "list_id", "nid", F.expr(
-                      "aggregate(_sd, CAST(0 AS DOUBLE), "
-                      "(acc, x) -> acc + x.subdist)").alias("_acc")))
-        scored = (folded.join(F.broadcast(qc), ["qid", "list_id"])
-                  .select("qid", "nid",
-                          _pq_dist_col(metric, F.col("_acc")
-                                       + F.col("_qc")).alias("distance")))
-        return select_k(scored, "qid", "distance", k, tie_cols=["nid"],
-                        select_min=minimize)
-    if residual:
-        if index.rotation is not None:
-            raise ValueError("rotation requires method='blas'")
+    # probed codes, exploded per subspace
+    probed = (codes_t.join(F.broadcast(probes_cv.select("qid", "list_id")),
+                           "list_id")
+              .select("qid", "list_id", "id",
+                      F.posexplode("codes").alias("sub", "code")))
+    # LUT lookup accumulation: deterministic subspace-ordered fold
+    sd = F.array_sort(F.collect_list(F.struct("sub", "subdist"))).alias("_sd")
+    fold = F.expr("aggregate(_sd, CAST(0 AS DOUBLE), (acc, x) -> acc + x.subdist)")
+    if residual and not ip:
         # per-(query, probed list) residual LUT — the ScaNN shape; the
         # packed key multiplier derives from n_lists (no collisions)
-        n_lists = len(index.centroids)
         pack = (F.when(F.col("qid") < 0,
                        F.raise_error("ivf_pq: qids must be non-negative"))
-                .otherwise(F.col("qid")) * F.lit(int(max(n_lists, 1)))
+                .otherwise(F.col("qid"))
+                * F.lit(int(max(len(index.centroids), 1)))
                 + F.col("list_id"))
         qres = probes_cv.select(
             pack.alias("_key"), "qid", "list_id",
             F.expr(_res_expr("_qv", "_cent")).alias("res"))
-        qsub = _subvecs(qres.select("_key", "res"), pq_dim,
+        qsub = _subvecs(qres.select("_key", "res"), index.pq_dim,
                         id_col="_key", vec_col="res") \
             .withColumnRenamed("id", "_key") \
             .withColumnRenamed("subvec", "qsub")
@@ -604,38 +469,37 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
                .join(qres.select("_key", "qid", "list_id"), "_key")
                .select("qid", "list_id", "sub", "code",
                        sdist.alias("subdist")))
-        probed = (codes_t.join(F.broadcast(probes), "list_id")
-                  .select("qid", "list_id", "id",
-                          F.posexplode("codes").alias("sub", "code")))
-        scored = (probed.join(F.broadcast(lut),
+        folded = (probed.join(F.broadcast(lut),
                               ["qid", "list_id", "sub", "code"])
-                  .groupBy("qid", F.col("id").alias("nid"))
-                  .agg(F.array_sort(
-                      F.collect_list(F.struct("sub", "subdist")))
-                      .alias("_sd"))
-                  .select("qid", "nid", _pq_dist_col(metric, F.expr(
-                      "aggregate(_sd, CAST(0 AS DOUBLE), "
-                      "(acc, x) -> acc + x.subdist)")).alias("distance")))
-        return select_k(scored, "qid", "distance", k, tie_cols=["nid"],
-                        select_min=minimize)
-    # raw path — LUT: (qid, sub, code, subdist), n_queries × pq_dim ×
-    # n_codes rows (tiny, broadcast)
-    qsub = _subvecs(q.withColumnRenamed("qid", "id"), pq_dim,
-                    id_col="id", vec_col="_qv") \
-        .withColumnRenamed("id", "qid").withColumnRenamed("subvec", "qsub")
-    lut = (qsub.join(F.broadcast(index.codebook_df), "sub")
-           .select("qid", "sub", "code", sdist.alias("subdist")))
-    # probed codes, exploded per subspace
-    probed = (codes_t.join(F.broadcast(probes), "list_id")
-              .select("qid", "id", F.posexplode("codes").alias("sub", "code")))
-    # LUT lookup accumulation: deterministic subspace-ordered fold
-    scored = (probed.join(F.broadcast(lut), ["qid", "sub", "code"])
-              .groupBy("qid", F.col("id").alias("nid"))
-              .agg(F.array_sort(F.collect_list(F.struct("sub", "subdist")))
-                   .alias("_sd"))
-              .select("qid", "nid", _pq_dist_col(metric, F.expr(
-                  "aggregate(_sd, CAST(0 AS DOUBLE), (acc, x) -> acc + x.subdist)"))
-                  .alias("distance")))
+                  .groupBy("qid", F.col("id").alias("nid")).agg(sd)
+                  .select("qid", "nid", fold.alias("_acc")))
+    else:
+        # per-query LUT: (qid, sub, code, subdist), n_queries × pq_dim ×
+        # n_codes rows (tiny, broadcast). IP residual: q·(c + r̂) = q·c +
+        # Σ_sub q_sub·r̂_sub — the same LUT of the UNSHIFTED query, with
+        # the per-(query, probed list) constant q·c joined in after the
+        # fold; list_id rides through the grouping (each row lives in
+        # exactly one list, so it's free).
+        keys = ["qid", "list_id"] if residual else ["qid"]
+        qsub = _subvecs(q.withColumnRenamed("qid", "id"), index.pq_dim,
+                        id_col="id", vec_col="_qv") \
+            .withColumnRenamed("id", "qid") \
+            .withColumnRenamed("subvec", "qsub")
+        lut = (qsub.join(F.broadcast(index.codebook_df), "sub")
+               .select("qid", "sub", "code", sdist.alias("subdist")))
+        folded = (probed.join(F.broadcast(lut), ["qid", "sub", "code"])
+                  .groupBy(*keys, F.col("id").alias("nid")).agg(sd)
+                  .select(*keys, "nid", fold.alias("_acc")))
+        if residual:
+            qc = probes_cv.select(
+                "qid", "list_id",
+                F.expr(distance_sql_spark("inner_product", "_qv",
+                                          "_cent")).alias("_qc"))
+            folded = (folded.join(F.broadcast(qc), ["qid", "list_id"])
+                      .select("qid", "nid",
+                              (F.col("_acc") + F.col("_qc")).alias("_acc")))
+    scored = folded.select("qid", "nid",
+                           _pq_dist_col(metric, F.col("_acc")).alias("distance"))
     return select_k(scored, "qid", "distance", k, tie_cols=["nid"],
                     select_min=minimize)
 
@@ -914,64 +778,27 @@ def ivf_sq_search(index: IVFSQIndex, queries: DataFrame, k: int = 10,
     vectors → top-k.
 
     ``method="expr"`` decodes+scores in JVM expressions (oracle path);
-    ``method="blas"`` cogroups each list with its probing queries —
-    int8 codes decode to a NumPy block (center + lo + (q+128)·step) and
-    score via one GEMM tile with local top-k (the throughput fine
-    stage, same shape as ivf_flat's). Directional: every local top-k
-    and the merge follow ``is_min_close(index.metric)``."""
+    ``method="blas"`` runs :func:`fine_topk` with a decoding scorer —
+    a list's int8 codes decode to a NumPy block (center + lo +
+    (q+128)·step) scored by one GEMM tile. Directional: every local
+    top-k and the merge follow ``is_min_close(index.metric)``."""
     from cuvs_spark.functions.distance import is_min_close
     minimize = is_min_close(index.metric)
-    spark = queries.sparkSession
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
-    # r14: map-only literal coarse stage; the probed list's centroid
-    # rides along so the expr fine stage below decodes without a
-    # centroid join. r15: the query vector rides along too — no
-    # probes ⋈ q join-back in either fine stage (same rows/values).
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    probes_cv = (q.select(
-        "qid", "_qv",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").alias("list_id"),
-                F.col("_s.cv").alias("_cent"), "_qv"))
+    probes_cv = probe_lists(index.centroids,
+                            _query_frame(queries, qid_col, qvec_col),
+                            n_probes)
     if method == "blas":
-        import pandas as pd
-
         from cuvs_spark.operators.brute_force import _pairwise_np
-        from cuvs_spark.operators.select_k import knn_merge_parts
+        C, lo, hi, metric = index.centroids, index.lo, index.hi, index.metric
 
-        C = index.centroids
-        lo, hi = index.lo, index.hi
-        bc = spark.sparkContext.broadcast((C, lo, hi, index.metric, k))
-        probing_q = probes_cv.select("list_id", "qid", "_qv")
+        def score(list_id, rows, qs):
+            codes = _matrix(rows["rcodes"])
+            X = C[list_id][None, :] + lo + (codes + 128.0) * (hi - lo) / 255.0
+            return _pairwise_np(_matrix(qs["_qv"]), X, metric)
 
-        def score(key, rows: pd.DataFrame, qpdf: pd.DataFrame):
-            if rows.empty or qpdf.empty:
-                return pd.DataFrame(columns=["qid", "nid", "distance"])
-            C, lo, hi, metric, k = bc.value
-            codes = np.vstack(rows["rcodes"].to_numpy()).astype(np.float64)
-            center = C[int(key[0])]
-            X = center[None, :] + lo + (codes + 128.0) * (hi - lo) / 255.0
-            ids = rows["id"].to_numpy().astype(np.int64)
-            Q = np.vstack(qpdf["_qv"].to_numpy()).astype(np.float64)
-            qids = qpdf["qid"].to_numpy().astype(np.int64)
-            D = _pairwise_np(Q, X, metric)
-            kk = min(k, D.shape[1])
-            part = np.argpartition(D if minimize else -D,
-                                   kk - 1, axis=1)[:, :kk]
-            return pd.DataFrame({
-                "qid": np.repeat(qids, kk),
-                "nid": np.take_along_axis(
-                    np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-        local = (index.rcodes.groupBy("list_id")
-                 .cogroup(probing_q.groupBy("list_id"))
-                 .applyInPandas(score,
-                                schema="qid long, nid long, distance double"))
-        return knn_merge_parts(local, k, select_min=minimize)
+        return fine_topk(index.rcodes,
+                         probes_cv.select("list_id", "qid", "_qv"), score, k,
+                         minimize)
     dec = _sq_dec("rcodes", "_cent", index.lo, index.hi)
     fine = (index.rcodes.join(F.broadcast(probes_cv), "list_id")
             .select("qid", F.col("id").alias("nid"),
@@ -1087,21 +914,11 @@ def ivf_bq_search(index: IVFBQIndex, queries: DataFrame, k: int = 10,
     from cuvs_spark.operators.pairwise import refine as exact_refine
     from cuvs_spark.preprocessing.quantize import binary_quantize
 
-    spark = queries.sparkSession
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
-    # r15: quantize the query inside the probe projection (both are
-    # pure functions of q) — the probes ⋈ qbits join-back disappears;
-    # same rows, same sign codes, same distances.
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    qb = binary_quantize(q, vec_col="_qv", threshold=threshold,
-                         out_col="qbits")
-    probes = (qb.select(
-        "qid", "qbits",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").alias("list_id"), "qbits"))
+    # the query's sign code rides through the probe explode with it
+    qb = binary_quantize(_query_frame(queries, qid_col, qvec_col),
+                         vec_col="_qv", threshold=threshold, out_col="qbits")
+    probes = (probe_lists(index.centroids, qb, n_probes)
+              .select("qid", "list_id", "qbits"))
     fine = index.bits.join(F.broadcast(probes), "list_id")
     hdist = F.expr(distance_sql_spark("bitwise_hamming", "qbits", "bits"))
     k0 = refine_k0 if refine_with is not None else k

@@ -44,6 +44,8 @@ from cuvs_spark.functions.distance import (
     distance_sql_duckdb,
     distance_sql_spark,
 )
+from cuvs_spark.operators.ivf_flat import (_keyed_like, _matrix, _query_frame,
+                                           fine_topk, probe_lists)
 from cuvs_spark.operators.select_k import select_k
 
 __all__ = [
@@ -219,6 +221,28 @@ def ivf_rabitq_extend(index: IVFRabitQIndex, new_rows: DataFrame, *,
     return replace(index, codes=index.codes.unionByName(new_codes))
 
 
+def _rabitq_scorer(bits: int):
+    """The RaBitQ estimator over one list's codes (the ``_est`` fold in
+    NumPy) as a :func:`fine_topk` scorer."""
+    g = float(1 << bits)
+
+    def score(list_id, rows, qs):
+        V = (2.0 * np.vstack(rows["codes"].to_numpy()) + 1.0 - g) / g
+        n2 = rows["n2"].to_numpy(float)
+        vn2 = rows["vn2"].to_numpy(float)
+        ipr = rows["ipr"].to_numpy(float)
+        qn2 = qs["qn2"].to_numpy(float)
+        IPQ = _matrix(qs["qres"]) @ V.T                # (p, m)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            T = (IPQ / (np.sqrt(vn2)[None, :] * np.sqrt(qn2)[:, None])) / \
+                (ipr / (np.sqrt(vn2) * np.sqrt(n2)))[None, :]
+        bad = ((ipr == 0) | (n2 == 0))[None, :] | (qn2 == 0)[:, None]
+        adj = np.where(bad, 0.0,
+                       2.0 * np.sqrt(n2)[None, :] * np.sqrt(qn2)[:, None] * T)
+        return n2[None, :] + qn2[:, None] - adj
+    return score
+
+
 def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
                       k: int = 10, n_probes: int = 8, *,
                       qid_col: str = "qid", qvec_col: str = "vec",
@@ -228,69 +252,24 @@ def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
     """Probe ``n_probes`` lists, score codes with the RaBitQ estimator,
     top-k -> ``(qid, nid, distance, rank)``; optionally re-rank a
     ``refine_k0`` shortlist exactly against ``refine_with`` (raw
-    vectors), as the reference pairs RaBitQ with refinement."""
-    spark = queries.sparkSession
+    vectors), as the reference pairs RaBitQ with refinement.
+
+    ``score_method="expr"`` folds the estimator in JVM expressions (the
+    oracle path); ``"blas"`` runs :func:`fine_topk` with the estimator
+    as a per-list scorer: the list's code matrix decodes once and every
+    probing query scores against it with ONE GEMM (``ipq = QR @ V.T``)."""
     B = index.bits_per_dim
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
-    # r14: map-only literal coarse stage; the probed center rides
-    # along so qres/qn2 need no centroid join. r15: the query vector
-    # rides along too — qside is a pure projection, no probes ⋈ q
-    # join-back (same rows, same values by construction).
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    probes_cv = (q.select(
-        "qid", "_qv",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").cast("long").alias("list_id"),
-                F.col("_s.cv").alias("_cent"), "_qv"))
-    qside = probes_cv.select(
+    k0 = refine_k0 if refine_with is not None else k
+    probes = _keyed_like(
+        probe_lists(index.centroids, _query_frame(queries, qid_col, qvec_col),
+                    n_probes), index.codes)
+    qside = probes.select(
         "qid", "list_id",
         F.expr(_res("spark", "_qv", "_cent")).alias("qres"),
         F.expr(distance_sql_spark("sqeuclidean", "_qv",
                                   "_cent")).alias("qn2"))
     if score_method == "blas":
-        # cogrouped per list: decode the list's code matrix once, score
-        # every probing query against it with ONE GEMM (ipq = QR @ V.T),
-        # keep a local top-k, merge — no per-pair row materialization
-        import pandas as pd
-        g = float(1 << B)
-        k0 = refine_k0 if refine_with is not None else k
-
-        def score(key, rows: pd.DataFrame, qp: pd.DataFrame):
-            if rows.empty or qp.empty:
-                return pd.DataFrame(columns=["qid", "nid", "distance"])
-            V = (2.0 * np.vstack(rows["codes"].to_numpy()) + 1.0 - g) / g
-            n2 = rows["n2"].to_numpy(float)
-            vn2 = rows["vn2"].to_numpy(float)
-            ipr = rows["ipr"].to_numpy(float)
-            ids = rows["id"].to_numpy(np.int64)
-            QR = np.vstack(qp["qres"].to_numpy()).astype(np.float64)
-            qn2 = qp["qn2"].to_numpy(float)
-            qids = qp["qid"].to_numpy(np.int64)
-            IPQ = QR @ V.T                      # (p, m)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                T = (IPQ / (np.sqrt(vn2)[None, :]
-                            * np.sqrt(qn2)[:, None])) / \
-                    (ipr / (np.sqrt(vn2) * np.sqrt(n2)))[None, :]
-            bad = ((ipr == 0) | (n2 == 0))[None, :] | (qn2 == 0)[:, None]
-            adj = np.where(bad, 0.0,
-                           2.0 * np.sqrt(n2)[None, :]
-                           * np.sqrt(qn2)[:, None] * T)
-            D = n2[None, :] + qn2[:, None] - adj
-            kk = min(k0, D.shape[1])
-            part = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-            return pd.DataFrame({
-                "qid": np.repeat(qids, kk),
-                "nid": np.take_along_axis(
-                    np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-        scored = (index.codes.groupBy("list_id")
-                  .cogroup(qside.groupBy("list_id"))
-                  .applyInPandas(score,
-                                 "qid long, nid long, distance double"))
+        short = fine_topk(index.codes, qside, _rabitq_scorer(B), k0, True)
     else:
         joined = index.codes.join(F.broadcast(qside), "list_id")
         scored = (joined
@@ -300,8 +279,7 @@ def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
                   .select("qid", F.col("id").alias("nid"),
                           F.expr(_est("n2", "qn2", "vn2", "ipr", "ipq"))
                           .alias("distance")))
-    k0 = refine_k0 if refine_with is not None else k
-    short = select_k(scored, "qid", "distance", k0, tie_cols=["nid"])
+        short = select_k(scored, "qid", "distance", k0, tie_cols=["nid"])
     if refine_with is None:
         return short
     from cuvs_spark.operators.pairwise import refine as exact_refine

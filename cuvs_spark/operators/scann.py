@@ -50,6 +50,9 @@ from cuvs_spark.functions.distance import (
     distance_sql_spark,
     is_min_close,
 )
+from cuvs_spark.operators.ivf_flat import (_flat_scorer, _keyed_like,
+                                           _query_frame, fine_topk,
+                                           probe_lists)
 from cuvs_spark.operators.select_k import select_k
 from cuvs_spark.preprocessing.pq import PQCodebook, _subvecs
 
@@ -271,49 +274,34 @@ def scann_build(dataset: DataFrame, n_leaves: int = 32, *,
                       soar_lambda=soar_lambda, metric=metric)
 
 
-def _probes(index: ScannIndex, q: DataFrame, n_probes: int) -> DataFrame:
-    # r15: the query vector rides along through the probe explode so
-    # downstream stages (cogroup qside, pq residual) need no
-    # probes ⋈ q join-back; consumers that only want (qid, list_id)
-    # prune the column away at no cost.
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    return (q.select(
-        "qid", "_qv",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").cast("long").alias("list_id"), "_qv"))
-
-
 def scann_search(index: ScannIndex, queries: DataFrame, k: int = 10,
                  n_probes: int = 8, *, qid_col: str = "qid",
                  qvec_col: str = "vec", method: str = "reorder",
                  score_method: str = "expr") -> DataFrame:
     """Probe leaves over the spilled assignment, score, top-k →
     ``(qid, nid, distance, rank)``. ``score_method="blas"`` scores the
-    reorder tier's candidate pairs with the vectorized row-wise kernel
-    (``score_pairs``) instead of the oracle-exact fold expression."""
+    reorder tier with :func:`fine_topk` over the spilled lists (the
+    IVF-Flat GEMM scorer) instead of the oracle-exact fold expression."""
     spark = queries.sparkSession
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
-    probes = _probes(index, q, n_probes)
+    q = _query_frame(queries, qid_col, qvec_col)
+    probes = _keyed_like(probe_lists(index.centroids, q, n_probes),
+                         index.assignments)
     if method == "reorder":
+        if score_method == "blas":
+            # distinct (id, leaf): a vector whose SOAR leaf equals its
+            # primary leaf must not occupy two local top-k slots; one
+            # probed through both of its leaves scores identically, and
+            # dedupe collapses it before the merge
+            lists = (index.assignments.select("id", "list_id").distinct()
+                     .join(index.vectors, "id")
+                     .select("list_id", "id", "vec"))
+            return fine_topk(lists, probes.select("list_id", "qid", "_qv"),
+                             _flat_scorer(index.metric), k,
+                             is_min_close(index.metric), dedupe=True)
         cand = (index.assignments
                 .join(F.broadcast(probes.select("qid", "list_id")),
                       "list_id")
                 .select("qid", "id").distinct())
-        if score_method == "blas":
-            # cogrouped GEMM per leaf (the IVF-Flat fine stage over the
-            # spilled lists); a vector probed through both of its leaves
-            # scores identically — dedupe collapses it before the merge
-            from cuvs_spark.operators.ivf_flat import _fine_blas
-            # distinct (id, leaf): a vector whose SOAR leaf equals its
-            # primary leaf must not occupy two local top-k slots
-            lists = (index.assignments.select("id", "list_id").distinct()
-                     .join(index.vectors, "id")
-                     .select("list_id", "id", "vec"))
-            return _fine_blas(lists, q, probes, k, index.metric,
-                              dedupe=True)
         fdist = F.expr(distance_sql_spark(index.metric, "_qv", "vec"))
         pairs = (cand.join(index.vectors, "id")
                  .join(F.broadcast(q), "qid")

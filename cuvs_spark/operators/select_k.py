@@ -53,6 +53,10 @@ def select_k(df: DataFrame,
     ``partial`` strategy (ignored otherwise).
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    columns = df.columns
+    if rank_col and rank_col in columns:
+        raise ValueError(f"select_k: input already has a column named "
+                         f"{rank_col!r}; drop it or pass another rank_col")
     order = [F.col(order_col).asc() if select_min else F.col(order_col).desc()]
     order += [F.col(c).asc() for c in tie_cols]
 
@@ -68,7 +72,7 @@ def select_k(df: DataFrame,
         # row's non-key columns, so the split is deterministic and
         # partition-independent; each (key, salt) reducer caps its
         # bucket to k, then the ≤ k·n_buckets survivors merge per key
-        other = [c for c in df.columns if c not in keys]
+        other = [c for c in columns if c not in keys]
         # salt over every HASHABLE non-key column: hashing only the
         # order value would collapse a hot key's rows into a handful of
         # buckets whenever scores are quantized/duplicated, silently
@@ -97,7 +101,7 @@ def select_k(df: DataFrame,
                         strategy="agg")
 
     if strategy == "agg":
-        other = [c for c in df.columns if c not in keys]
+        other = [c for c in columns if c not in keys]
         sort_struct = F.struct(
             (F.col(order_col) if select_min else -F.col(order_col)).alias("_o"),
             *[F.col(c).alias(f"_t{i}") for i, c in enumerate(tie_cols)],
@@ -110,16 +114,18 @@ def select_k(df: DataFrame,
             cols.append((F.col("_rank0") + 1).cast("long").alias(rank_col))
         return out.select(*cols)
 
-    # r15 (construction latency): one select carries the row_number,
-    # the post-filter select emits the final columns — 3 analyzed
-    # Datasets instead of 4; the optimized plan (CollapseProject +
-    # column pruning) is identical to the withColumn/drop chain.
+    # one select carries the row_number, the post-filter select emits
+    # the final columns; the row_number column takes a name no input
+    # column has
+    rn = "_rn"
+    while rn in columns:
+        rn = "_" + rn
     w = Window.partitionBy(*keys).orderBy(*order)
-    out = (df.select("*", F.row_number().over(w).alias("_rn"))
-           .filter(F.col("_rn") <= k))
-    final = list(df.columns)
+    out = (df.select("*", F.row_number().over(w).alias(rn))
+           .filter(F.col(rn) <= k))
+    final = list(columns)
     if rank_col:
-        final.append(F.col("_rn").cast("long").alias(rank_col))
+        final.append(F.col(rn).cast("long").alias(rank_col))
     return out.select(*final)
 
 

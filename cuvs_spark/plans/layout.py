@@ -31,15 +31,7 @@ def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int = 32,
 def plan_has_exchange(df: DataFrame) -> bool:
     """True if the physical plan contains a shuffle Exchange — the
     assertion hook for co-location tests."""
-    import re
-
-    spark = df.sparkSession
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
-    # shuffle exchanges print as "+- Exchange (N"; broadcast exchanges
-    # as "BroadcastExchange" — only the former is a shuffle
-    return re.search(r"[+:]- Exchange \(", plan) is not None
+    return count_exchanges(df)[0] > 0
 
 
 def plan_string(df: DataFrame) -> str:
@@ -53,15 +45,17 @@ def plan_string(df: DataFrame) -> str:
 
 def count_exchanges(df: DataFrame) -> tuple[int, int]:
     """(shuffle_exchanges, broadcast_exchanges) in the physical plan —
-    the budget hook for plan-shape regression tests."""
+    the budget hook for plan-shape regression tests.
+
+    Counts the plan TREE only: the formatted text lists every node a
+    second time in its detail section, and ``ReusedExchange`` nodes
+    are not new exchanges. Tree lines read ``+- Exchange (N)`` /
+    ``:- BroadcastExchange (N)``."""
     import re
 
-    spark = df.sparkSession
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        .fromString("formatted"))
+    plan = plan_string(df)
     return (len(re.findall(r"[+:]- Exchange \(", plan)),
-            len(re.findall(r"BroadcastExchange", plan)))
+            len(re.findall(r"[+:]- BroadcastExchange \(", plan)))
 
 
 def spread_narrow(df: DataFrame, key_col: str) -> DataFrame:

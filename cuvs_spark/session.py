@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, capped at 48g. The driver JVM
+    collects hard only when its heap nears ``-Xmx``, so a cap above
+    physical memory lets a long-lived session (the test suite) grow
+    until the kernel's OOM killer takes the JVM."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 def get_spark(app_name: str = "cuvs_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -42,7 +54,8 @@ def get_spark(app_name: str = "cuvs_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("CUVS_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("CUVS_SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Aggressive generated-method splitting: long-lived sessions
         # occasionally produced a whole-stage span whose processNext()

@@ -77,6 +77,30 @@ def test_select_k_strategies(spark, vectors_df, queries_df):
             == sorted(map(tuple, g.select("qid", "nid", "rank").collect())))
 
 
+def test_select_k_reserved_names(spark):
+    """A caller column named like select_k's internal ``_rn`` rides
+    through untouched; an input that already has ``rank_col`` is
+    rejected by name on every strategy instead of yielding two columns
+    of that name."""
+    df = spark.createDataFrame(
+        [(1, 10, 0.5, 7), (1, 11, 0.25, 8), (1, 12, 0.75, 9), (2, 10, 1.0, 6)],
+        "qid long, nid long, distance double, _rn long")
+    out = select_k(df, "qid", "distance", 2, tie_cols=["nid"],
+                   strategy="window")
+    assert out.columns == ["qid", "nid", "distance", "_rn", "rank"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 10, 0.5, 7, 2), (1, 11, 0.25, 8, 1), (2, 10, 1.0, 6, 1)]
+    ranked = df.withColumnRenamed("_rn", "rank")
+    for strategy in ("window", "agg", "partial", "auto"):
+        with pytest.raises(ValueError, match="'rank'"):
+            select_k(ranked, "qid", "distance", 2, strategy=strategy)
+    with pytest.raises(ValueError, match="'_rn'"):
+        select_k(df, "qid", "distance", 2, rank_col="_rn")
+    # rank_col=None emits no rank column, so an input "rank" is data
+    kept = select_k(ranked, "qid", "distance", 1, rank_col=None)
+    assert kept.columns == ranked.columns
+
+
 def test_refine_recovers_exact(spark, vectors_df, queries_df, tiny_vectors,
                                tiny_queries):
     """FIXTURES.md T6: candidates = true top-k ∪ noise → refine returns

@@ -183,6 +183,66 @@ def test_ivf_flat_broadcast_path_agrees(spark, vectors_df, queries_df):
     assert outs["expr"] == outs["blas"] == outs["broadcast"]
 
 
+def _search_paths(family, vectors_df, queries_df):
+    """{method: sorted (qid, rank, nid)} for one IVF family's search
+    paths over the same index."""
+    from cuvs_spark.operators.ivf_pq import (ivf_pq_build, ivf_pq_search,
+                                             ivf_sq_build, ivf_sq_search)
+    from cuvs_spark.operators.ivf_rabitq import (ivf_rabitq_build,
+                                                 ivf_rabitq_search)
+    if family == "sq":
+        idx = ivf_sq_build(vectors_df, 8, kmeans_n_iters=4)
+        run = lambda m: ivf_sq_search(idx, queries_df, 5, 4, method=m)
+    elif family == "rabitq":
+        idx = ivf_rabitq_build(vectors_df, 8, kmeans_n_iters=4)
+        run = lambda m: ivf_rabitq_search(idx, queries_df, 5, 4,
+                                          score_method=m)
+    else:
+        # an expr-built IVF-PQ stores list_id as long while the probes
+        # carry int: the cogroup must still pair every list
+        idx = ivf_pq_build(vectors_df, 8, pq_dim=4, pq_bits=4,
+                           encode="residual")
+        run = lambda m: ivf_pq_search(idx, queries_df, 5, 4, method=m)
+    return {m: sorted((r["qid"], r["rank"], r["nid"])
+                      for r in run(m).collect())
+            for m in ("expr", "blas")}
+
+
+@pytest.mark.parametrize("family", ["sq", "rabitq", "pq_expr_built"])
+def test_ivf_search_blas_matches_expr(spark, vectors_df, queries_df, family):
+    """The shared fine stage (cogroup + per-family scorer + local top-k)
+    ranks exactly like each family's oracle expr path. Partition
+    coalescing is off so a cogroup whose two sides hash their list_id
+    differently loses lists instead of meeting in one partition."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        outs = _search_paths(family, vectors_df, queries_df)
+    finally:
+        spark.conf.set(key, old)
+    assert outs["expr"] and outs["expr"] == outs["blas"]
+
+
+@pytest.mark.parametrize("minimize", [True, False])
+def test_local_topk_matches_full_sort(minimize):
+    """The one per-list local top-k keeps, per query row, exactly the
+    k best columns a full NumPy sort would (k clamps to the row
+    width)."""
+    from cuvs_spark.operators.ivf_flat import _local_topk
+    rng = np.random.default_rng(7)
+    D = rng.random((6, 40))
+    qids = np.arange(100, 106)
+    ids = np.arange(1000, 1040)
+    for k in (1, 5, 40, 64):
+        got = _local_topk(qids, ids, D, k, minimize)
+        order = np.argsort(D if minimize else -D, axis=1)[:, :min(k, 40)]
+        want = {(int(qids[i]), int(ids[j]), float(D[i, j]))
+                for i in range(6) for j in order[i]}
+        assert len(got) == len(want)
+        assert set(zip(got["qid"], got["nid"], got["distance"])) == want
+
+
 def test_ivf_prefilter_all_methods(spark, vectors_df, queries_df):
     """The bitset-analog prefilter must exclude filtered ids on every
     physical path, for both IVF-Flat and IVF-PQ."""

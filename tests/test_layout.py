@@ -178,3 +178,14 @@ def test_paragraph_dedup_plan_partial_agg(spark):
     assert "partial_min" in plan, plan
     assert "Window" not in plan, plan
     assert "CartesianProduct" not in plan
+
+
+def test_count_exchanges_counts_tree_nodes_once(spark):
+    """The formatted plan prints every node twice (tree + detail
+    section); one broadcast join is ONE broadcast exchange."""
+    from cuvs_spark.plans.layout import count_exchanges, plan_string
+    big = spark.range(100).withColumn("v", F.col("id") * 2)
+    small = spark.range(10).withColumnRenamed("id", "k")
+    joined = big.join(F.broadcast(small), big["id"] == small["k"])
+    assert plan_string(joined).count("BroadcastExchange") >= 2
+    assert count_exchanges(joined) == (0, 1)

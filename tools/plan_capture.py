@@ -26,6 +26,7 @@ def main() -> None:
 
     from bench import build_benches
     from cuvs_spark import get_spark
+    from cuvs_spark.plans.layout import count_exchanges
 
     spark = get_spark("cuvs_spark_plan_capture")
     spark.sparkContext.setLogLevel("ERROR")
@@ -39,7 +40,8 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(txt)
-        print(f"{path}: {txt.count('Exchange')} Exchange refs, "
+        shuffles, bcasts = count_exchanges(df)
+        print(f"{path}: {shuffles} shuffle / {bcasts} broadcast exchanges, "
               f"{len(txt.splitlines())} lines")
 
 
